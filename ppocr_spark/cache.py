@@ -73,12 +73,9 @@ def plan_size_bytes(df: DataFrame, default: int = 1 << 62) -> int:
     the file-size sum after partition pruning). ``default`` is returned
     when stats are unavailable — callers pick the scale-safe side."""
     try:
-        return int(
-            df._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-            .sizeInBytes()
-            .toString()
-        )
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     except Exception:  # noqa: BLE001 — py4j/stats failure
         return default
+    # py4j converts the estimate to a Python int under PySpark 4.1; a JVM
+    # BigInteger proxy is read through its string form
+    return size if isinstance(size, int) else int(size.toString())

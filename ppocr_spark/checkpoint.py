@@ -114,7 +114,7 @@ def run_resumable(
     out_dir: str,
     cfg: PPOCRConfig | None = None,
     n_buckets: int = 64,
-    broadcast_media: bool | None = None,
+    broadcast_media: bool = False,
 ) -> dict:
     """Run the extraction pipeline bucket-incrementally. Returns run stats.
 

@@ -35,8 +35,6 @@ class PPOCRConfig:
 
     # --- classification (cpp/src/args.cpp:54-57)
     cls_thresh: float = 0.9
-    cls_batch_num: int = 1
-    cls_image_shape: tuple[int, int, int] = (3, 48, 192)
 
     # --- recognition (cpp/src/args.cpp:59-64)
     rec_batch_num: int = 6
@@ -44,14 +42,10 @@ class PPOCRConfig:
     # template recognizer needs the extra rows to stay alias-free after the
     # warp → resize chain, so the engine default is 64
     rec_img_h: int = 64
-    rec_img_w: int = 320
     # per-language recognition dict ('en'|'zh'|'full') — the analog of the
     # reference's per-language config files rewriting rec_char_dict_path
     # (cpp/src/args.cpp:109-163)
     rec_lang: str = "full"
-
-    # --- output (cpp/src/args.cpp:40, task.cpp:22-37)
-    ensure_ascii: bool = True
 
     # --- layout post-processing (api/python/tbpu/__init__.py:14-29)
     parser: str = "multi_para"  # none|multi_para|multi_line|multi_none|
@@ -65,9 +59,7 @@ class PPOCRConfig:
     # --- Spark-scale knobs (no reference analog; north_rule axes A+B)
     shuffle_partitions: int = 32
     doc_salt_buckets: int = 8        # salting factor for media-heavy docs
-    skew_span_threshold: int = 32    # spans/doc above which a doc is 'skewed'
     arrow_batch_rows: int = 64       # maxRecordsPerBatch for media UDFs
-    checkpoint_dir: str | None = None  # per-partition manifest table location
 
     def replace(self, **kw) -> "PPOCRConfig":
         return dataclasses.replace(self, **kw)

@@ -902,8 +902,8 @@ def ivf_topk_fine(
         )
         .select("qid", "qv", "qn", F.explode("cells").alias("cl"))
     )
-    # join-strategy auto-select (mirrors ocr_media_spans' media-path
-    # gate): a probe/batch-sized query set rides as a broadcast hash
+    # join-strategy auto-select by the optimizer's size estimate: a
+    # probe/batch-sized query set rides as a broadcast hash
     # join — zero shuffle of the corpus-sized inverted side; a
     # corpus-sized query set (offline all-pairs kNN) would OOM every
     # executor as a broadcast, so it takes a shuffle equi-join on the

@@ -1,14 +1,16 @@
 """The Spark extraction pipeline (SURVEY.md §3 'Our Spark lifecycle').
 
 Dataflow (all relational glue is Catalyst-optimizable DataFrame ops; all
-pixel work lives in ONE Arrow-batched ``mapInPandas`` UDF):
+pixel work lives in ONE Arrow-batched ``mapInArrow`` UDF):
 
     documents(doc_id, spans)
       → explode(spans)                         [generate, narrow]
       ├─ kind='text'  → vectorized normalizer  [regexp_replace/trim — JVM]
-      └─ kind='media' → join media on media_ref [left join; broadcast when
-                         the media side is small, else shuffle join + AQE]
-                      → mapInPandas(ocr_udf)    [det→cls→rec→layout, Arrow]
+      └─ kind='media' → group span requests per payload
+                                                [hash exchange on base_ref]
+                      → left join payloads      [co-partitioned on base_ref]
+                      → mapInArrow(ocr_udf)     [decode each page once,
+                                                 det→cls→rec→layout]
       → union                                   [no shuffle]
       → groupBy(doc_id) reassembly              [salted two-phase when docs
                                                  are media-heavy (north_rule)]
@@ -21,21 +23,34 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ppocr_spark import cache
 from ppocr_spark.config import PPOCRConfig
 from ppocr_spark.status import StatusCode
 
-# output schema of the OCR UDF (per media span)
-OCR_RESULT_SCHEMA = (
-    "doc_id string, offset int, media_ref string, code int, text string, "
-    "boxes array<array<int>>, texts array<string>, scores array<float>, "
-    "cls_labels array<int>, cls_scores array<float>, ends array<string>"
+# one OCR result row (per media span) as the UDF builds it; the Spark
+# schema is derived from it, so the two cannot drift apart
+_OCR_RESULT_ARROW = pa.struct(
+    [
+        ("doc_id", pa.string()),
+        ("offset", pa.int32()),
+        ("media_ref", pa.string()),
+        ("code", pa.int32()),
+        ("text", pa.string()),
+        ("boxes", pa.list_(pa.list_(pa.int32()))),
+        ("texts", pa.list_(pa.string())),
+        ("scores", pa.list_(pa.float32())),
+        ("cls_labels", pa.list_(pa.int32())),
+        ("cls_scores", pa.list_(pa.float32())),
+        ("ends", pa.list_(pa.string())),
+    ]
 )
+OCR_RESULT_SCHEMA = from_arrow_schema(pa.schema(list(_OCR_RESULT_ARROW)))
 
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,order:int,code:int>"
 
@@ -120,8 +135,8 @@ def _ocr_one(
         return {**empty, "code": int(no_content)}
     data = bytes(content)
     t0 = perf_counter()
-    # decode_cache (grouped co-partitioned path): all requests of one UDF
-    # row share one payload, so each page decodes once per group — the
+    # decode_cache (the OCR UDF): all requests of one UDF row share one
+    # payload, so each page decodes once per group — the
     # decoded page is read-only downstream (det/crop/cls never mutate it)
     cached = decode_cache.get(page) if decode_cache is not None else None
     if cached is not None:
@@ -230,142 +245,53 @@ def _ocr_one(
     }
 
 
-def _arrow_out_type():
-    """Arrow struct of one OCR result row — shared by the per-span and
-    grouped UDFs (must stay in sync with OCR_RESULT_SCHEMA)."""
-    import pyarrow as pa
+def make_grouped_ocr_udf(
+    cfg: PPOCRConfig, metrics: dict | None = None, from_base64: bool = False
+):
+    """The OCR UDF: an Arrow-batch generator for ``mapInArrow``. Each input
+    row carries ONE media payload (``content``) plus the list of span
+    requests addressing it (``reqs``: doc_id/offset/media_ref/page
+    structs); each page of the payload is decoded once per row, however
+    many requests address it, and the payload is never duplicated per
+    span row. Output: one ``OCR_RESULT_SCHEMA`` row per request, in
+    request order.
 
-    return pa.struct(
-        [
-            ("doc_id", pa.string()),
-            ("offset", pa.int32()),
-            ("media_ref", pa.string()),
-            ("code", pa.int32()),
-            ("text", pa.string()),
-            ("boxes", pa.list_(pa.list_(pa.int32()))),
-            ("texts", pa.list_(pa.string())),
-            ("scores", pa.list_(pa.float32())),
-            ("cls_labels", pa.list_(pa.int32())),
-            ("cls_scores", pa.list_(pa.float32())),
-            ("ends", pa.list_(pa.string())),
-        ]
-    )
-
-
-def make_ocr_udf(cfg: PPOCRConfig, metrics: dict | None = None):
-    """Arrow-batch generator for ``mapInArrow``; cfg travels by closure
-    (the broadcast analog of the reference's one-time engine init,
-    cpp/src/task.cpp:243-250 — the glyph 'model weights' rebuild
-    deterministically per executor and are process-cached).
-
-    ``metrics`` (from ``make_stage_metrics``): K5 per-stage timing
-    accumulators, added to once per batch (negligible overhead vs the
-    multi-ms spans being timed).
+    cfg travels by closure (the broadcast analog of the reference's
+    one-time engine init, cpp/src/task.cpp:243-250 — the glyph 'model
+    weights' rebuild deterministically per executor and are
+    process-cached). ``metrics`` (from ``make_stage_metrics``): K5
+    per-stage timing accumulators, added to once per batch.
+    ``from_base64`` selects the base64 error family of ``_ocr_one``.
 
     mapInArrow, not mapInPandas: the input carries multi-MB binary image
     payloads, and pandas conversion would copy every payload into Python
     object arrays twice per batch."""
-    import pyarrow as pa
-
-    out_type = _arrow_out_type()
 
     def ocr_udf(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            offsets = batch.column("offset").to_pylist()
-            refs = batch.column("media_ref").to_pylist()
-            contents = batch.column("content")
-            pages = (
-                batch.column("page").to_pylist()
-                if "page" in batch.schema.names
-                else [None] * batch.num_rows
-            )
-            b64s = (
-                batch.column("src_b64").to_pylist()
-                if "src_b64" in batch.schema.names
-                else [False] * batch.num_rows
-            )
             totals = dict.fromkeys(STAGE_KEYS, 0.0)
             rows = []
-            for i in range(batch.num_rows):
-                c = contents[i].as_py() if contents[i].is_valid else None
-                r = _ocr_one(c, cfg, page=pages[i], from_base64=bool(b64s[i]))
-                if metrics is not None:
-                    for k, v in r["stage_ms"].items():
-                        totals[k] += v
-                    totals["ocr_spans"] += 1
-                rows.append(
-                    {
-                        "doc_id": doc_ids[i],
-                        "offset": offsets[i],
-                        "media_ref": refs[i],
-                        "code": r["code"],
-                        "text": r["text"],
-                        "boxes": r["boxes"],
-                        "texts": r["texts"],
-                        "scores": r["scores"],
-                        "cls_labels": r["cls_labels"],
-                        "cls_scores": r["cls_scores"],
-                        "ends": r["ends"],
-                    }
-                )
-            if metrics is not None:
-                for k, v in totals.items():
-                    if v:
-                        metrics[k].add(v)
-            arr = pa.array(rows, type=out_type)
-            yield pa.RecordBatch.from_struct_array(arr)
-
-    return ocr_udf
-
-
-def make_grouped_ocr_udf(cfg: PPOCRConfig, metrics: dict | None = None):
-    """Grouped variant of the OCR UDF for the co-partitioned (non-
-    broadcast) path: each input row carries ONE media payload plus the
-    list of span requests addressing it (reqs: doc_id/offset/media_ref/
-    page structs) — the payload is decoded against many spans without
-    ever being duplicated per span row. Output rows are identical to
-    ``make_ocr_udf``'s."""
-    import pyarrow as pa
-
-    out_type = _arrow_out_type()
-
-    def ocr_udf(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            reqs_col = batch.column("reqs").to_pylist()
-            contents = batch.column("content")
-            totals = dict.fromkeys(STAGE_KEYS, 0.0)
-            rows = []
-            for i in range(batch.num_rows):
-                c = contents[i].as_py() if contents[i].is_valid else None
+            for reqs, content in zip(
+                batch.column("reqs").to_pylist(), batch.column("content")
+            ):
+                c = content.as_py() if content.is_valid else None
                 page_cache: dict = {}
-                for req in reqs_col[i]:
+                for req in reqs:
                     r = _ocr_one(c, cfg, page=req["page"],
+                                 from_base64=from_base64,
                                  decode_cache=page_cache)
                     if metrics is not None:
                         for k, v in r["stage_ms"].items():
                             totals[k] += v
                         totals["ocr_spans"] += 1
-                    rows.append(
-                        {
-                            "doc_id": req["doc_id"],
-                            "offset": req["offset"],
-                            "media_ref": req["media_ref"],
-                            "code": r["code"],
-                            "text": r["text"],
-                            "boxes": r["boxes"],
-                            "texts": r["texts"],
-                            "scores": r["scores"],
-                            "cls_labels": r["cls_labels"],
-                            "cls_scores": r["cls_scores"],
-                            "ends": r["ends"],
-                        }
-                    )
+                    # pa.array drops the keys the struct does not declare
+                    # (the request's page, the result's stage_ms)
+                    rows.append({**req, **r})
             if metrics is not None:
                 for k, v in totals.items():
                     if v:
                         metrics[k].add(v)
-            arr = pa.array(rows, type=out_type)
+            arr = pa.array(rows, type=_OCR_RESULT_ARROW)
             yield pa.RecordBatch.from_struct_array(arr)
 
     return ocr_udf
@@ -442,132 +368,73 @@ def media_span_ids(spans: DataFrame) -> DataFrame:
     )
 
 
-# media-broadcast budget for ocr_media_spans' auto path: the blob table
-# rides whole to every executor below this; above it the grouped
-# co-partitioned join keeps blobs sharded (within 1.08x of broadcast at
-# 800 docs — CLAUDE.md round-3 measurement)
-_BROADCAST_MEDIA_BYTES = 64 << 20
+def ocr_grouped(
+    ids: DataFrame,
+    payloads: DataFrame,
+    cfg: PPOCRConfig,
+    metrics: dict | None = None,
+    n_part: int | None = None,
+) -> DataFrame:
+    """Group the slim span requests ``ids`` (doc_id, offset, media_ref,
+    base_ref, page) per ``base_ref`` BEFORE the payload join, left-join
+    ``payloads`` (base_ref, content) — missing refs keep a NULL payload →
+    PATH_NOT_EXIST — and run the OCR UDF: ONE payload row serves every
+    page/span addressing that media, so a PDF with 50 page spans ships its
+    blob once instead of 50 times (the per-partition payload-cache design,
+    SCALE.md §3b).
+
+    ``n_part``: hash-repartition the grouped rows on base_ref to this
+    count, which AQE cannot coalesce — a small input would otherwise
+    serialize the OCR stage onto a handful of tasks. ``None`` for inputs
+    the storage layout already co-locates (``extract_documents_colocated``).
+    """
+    # One row per payload, not per span. An interleaved A/B at local[4] (a
+    # 4-vCPU VM) on the docs_mixed benchmark inputs (median pass wall over
+    # 6 rotated rounds, seeds 1 / 7) put the per-span arm this replaced
+    # (payload broadcast onto span rows, range-partitioned by blob size)
+    # at 4.07 / 4.35 s, this grouping co-partitioned at 3.83 / 4.29 s and
+    # with a broadcast payload side at 3.86 / 4.23 s. The per-span arm did
+    # one thing better: it spread one hot payload's spans over several
+    # tasks, where here all spans of a payload run in one task. No
+    # benchmark workload has such a payload (docs_mixed: at most 10 spans
+    # on one payload).
+    grouped = ids.groupBy("base_ref").agg(
+        F.collect_list(
+            F.struct("doc_id", "offset", "media_ref", "page")
+        ).alias("reqs")
+    )
+    if n_part:
+        grouped = grouped.repartition(n_part, "base_ref")
+    return (
+        grouped.join(payloads, "base_ref", "left")
+        .drop("base_ref")
+        .mapInArrow(make_grouped_ocr_udf(cfg, metrics), schema=OCR_RESULT_SCHEMA)
+    )
 
 
 def ocr_media_spans(
     spans: DataFrame,
     media: DataFrame,
     cfg: PPOCRConfig,
-    broadcast_media: bool | None = None,
+    broadcast_media: bool = False,
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Media branch: resolve media_ref → content (left join keeps missing
-    refs → PATH_NOT_EXIST), then the OCR UDF. ``broadcast_media=None``
-    auto-broadcasts when the media plan is below Spark's threshold (AQE
-    decides); pass True/False to force."""
+    """Media branch: resolve media_ref → content, then the OCR UDF
+    (``ocr_grouped``). By default both join sides are hash-partitioned on
+    base_ref with the same count, so the join needs no further exchange —
+    the payload moves exactly once — and Spark (planner or AQE) still
+    broadcasts a media side below its broadcast threshold.
+    ``broadcast_media=True`` broadcasts the payload side onto the grouped
+    rows instead."""
     m = media.select(F.col("media_ref").alias("base_ref"), "content")
-    ids = media_span_ids(spans)
-    par = spans.sparkSession.sparkContext.defaultParallelism
-    if broadcast_media is None:
-        # the documented auto: decide by the media plan's optimizer size
-        # estimate against the broadcast budget (the ivf_topk_fine
-        # pattern) — a small media table rides to executors whole, a
-        # corpus-scale blob table takes the grouped co-partitioned path.
-        # `if broadcast_media:` alone silently made None behave as False.
-        from ppocr_spark.cache import plan_size_bytes
-
-        broadcast_media = (
-            plan_size_bytes(m, default=1 << 62) <= _BROADCAST_MEDIA_BYTES
-        )
-    if broadcast_media:
-        # EXPLICIT repartition before the heavy UDF: a small parquet scan
-        # yields 1-2 input partitions and would serialize all OCR work onto
-        # 1-2 cores. COST-ORDERED waves: range-partition the slim span rows
-        # by payload byte size DESC (size broadcast-joined from a slim
-        # (base_ref, length) projection — per-span kernel cost tracks page
-        # pixels, which tracks blob bytes), so the heaviest tasks schedule
-        # first and the in-stage straggler tail is made of the cheapest
-        # tasks. 5 waves per core: per-span cost varies ~3x with page size,
-        # and coarse 2-wave partitioning leaves the final wave a straggler
-        # tail (22% wall at 32 cores). Cost-ordering the waves beat plain
-        # round-robin by ~6% wall in every interleaved A/B pair (12800
-        # docs, local[32], quiet window, round 3). Missing refs sort last
-        # (NULL size) — they are the cheapest rows of all.
-        sizes = media.select(
-            F.col("media_ref").alias("base_ref"),
-            F.length("content").alias("__blob_len"),
-        )
-        ids = (
-            ids.join(F.broadcast(sizes), "base_ref", "left")
-            .repartitionByRange(
-                max(par * 5, cfg.shuffle_partitions),
-                F.desc("__blob_len"), "base_ref", "doc_id", "offset",
-            )
-            .drop("__blob_len")
-        )
-        # broadcast join AFTER the shuffle: only the slim (doc_id, offset,
-        # media_ref) rows move; the image payload attaches in place
-        req = ids.join(F.broadcast(m), "base_ref", "left").drop("base_ref")
-        return req.mapInArrow(
-            make_ocr_udf(cfg, metrics), schema=OCR_RESULT_SCHEMA
-        )
-    # media too big to broadcast (the 100 TB path): GROUP the slim span
-    # rows per base_ref BEFORE the payload join, so ONE payload row serves
-    # every page/span addressing that media — a PDF with 50 page spans
-    # ships its blob once instead of 50 times (the per-partition
-    # payload-cache design, SCALE.md §3b). Both sides are EXPLICITLY
-    # hash-partitioned on base_ref with the same count, so (a) the join
-    # needs no further exchange — the payload moves exactly once — and
-    # (b) AQE cannot coalesce the slim grouped side down to a handful of
-    # partitions and serialize the OCR stage (user repartitions pin the
-    # count). Caveat: all spans of one media run in one task; media
-    # referenced by very many spans should take the broadcast path.
-    n_part = max(par * 4, cfg.shuffle_partitions)
-    grouped = (
-        ids.groupBy("base_ref")
-        .agg(
-            F.collect_list(
-                F.struct("doc_id", "offset", "media_ref", "page")
-            ).alias("reqs")
-        )
-        .repartition(n_part, "base_ref")
-        .join(m.repartition(n_part, "base_ref"), "base_ref", "left")
-        .drop("base_ref")
+    n_part = max(
+        spans.sparkSession.sparkContext.defaultParallelism * 4,
+        cfg.shuffle_partitions,
     )
-    return grouped.mapInArrow(
-        make_grouped_ocr_udf(cfg, metrics), schema=OCR_RESULT_SCHEMA
+    payloads = F.broadcast(m) if broadcast_media else m.repartition(
+        n_part, "base_ref"
     )
-
-
-def ocr_media_spans_colocated(
-    media_spans: DataFrame,
-    media: DataFrame,
-    cfg: PPOCRConfig,
-    metrics: dict | None = None,
-) -> DataFrame:
-    """Media branch over BUCKETED inputs (readers.write_extraction_layout):
-    both relations are hash-bucketed + bucket-sorted on ``base_ref`` with
-    the same bucket count, so the ENTIRE pre-UDF section — group the span
-    requests per payload, attach the payload — plans with ZERO Exchange:
-    the groupBy's hash requirement and the join's co-partitioning are both
-    satisfied by the storage layout. At 10^12 docs this removes the two
-    explicit repartitions of the co-partitioned path (the payload shuffle,
-    the pipeline's largest data movement) entirely; the cost was paid once
-    at ingest. Partition count = bucket count, so size buckets for the OCR
-    stage's parallelism at ingest. Pinned by
-    ``tests/test_plans.py::TestColocatedExtraction``.
-
-    ``media_spans``: (doc_id, offset, media_ref, base_ref, page) bucketed
-    by base_ref; ``media``: (base_ref, content) bucketed the same way.
-    """
-    grouped = (
-        media_spans.groupBy("base_ref")
-        .agg(
-            F.collect_list(
-                F.struct("doc_id", "offset", "media_ref", "page")
-            ).alias("reqs")
-        )
-        .join(media, "base_ref", "left")
-        .drop("base_ref")
-    )
-    return grouped.mapInArrow(
-        make_grouped_ocr_udf(cfg, metrics), schema=OCR_RESULT_SCHEMA
-    )
+    return ocr_grouped(media_span_ids(spans), payloads, cfg, metrics, n_part)
 
 
 def extract_documents_colocated(
@@ -577,17 +444,23 @@ def extract_documents_colocated(
     metrics: dict | None = None,
 ) -> DataFrame:
     """``extract_documents`` over the ingest-time bucket layout written by
-    ``readers.write_extraction_layout``: the media branch is the
-    zero-Exchange colocated path; the text branch scans its own table
-    (no media join to co-locate). Output contract identical to
-    ``extract_documents`` (span-sequence equality pinned in
-    tests/test_pipeline_e2e.py)."""
+    ``readers.write_extraction_layout``. Both media relations are
+    hash-bucketed + bucket-sorted on ``base_ref`` with the same bucket
+    count, so ``ocr_grouped`` without repartitions plans the ENTIRE
+    pre-UDF media branch — group the span requests per payload, attach the
+    payload — with ZERO Exchange: the storage layout satisfies both the
+    groupBy's hash requirement and the join's co-partitioning, and the
+    payload shuffle was paid once at ingest. Partition count = bucket
+    count, so size buckets for the OCR stage's parallelism at ingest. The
+    text branch scans its own table (no media join to co-locate). Output
+    contract identical to ``extract_documents``; both pinned by
+    ``tests/test_plans.py::TestColocatedExtraction``."""
     cfg = cfg or PPOCRConfig(cls=True, use_angle_cls=True)
     text_r = normalize_text_spans(
         spark.table(f"{prefix}_text_spans"), cfg.html_strip
     )
     media_r = media_results_as_spans(
-        ocr_media_spans_colocated(
+        ocr_grouped(
             spark.table(f"{prefix}_media_spans"),
             spark.table(f"{prefix}_media"),
             cfg,
@@ -612,7 +485,7 @@ def ocr_requests(
 
     ``requests`` needs (req_id, request). Envelope errors short-circuit
     before any OCR work (the rows never reach the UDF); path and base64
-    tasks run through the SAME OCR stage with a source flag selecting the
+    tasks run through the SAME OCR UDF, built per source to select the
     error family."""
     from ppocr_spark.sources.readers import (
         decode_base64_requests,
@@ -631,15 +504,16 @@ def ocr_requests(
     ).select("req_id", "task_kind", "code", F.lit("").alias("text"))
 
     def run_ocr(df: DataFrame, kind: str) -> DataFrame:
-        ocr_in = df.select(
+        # one request per payload row: a list of length one
+        req = F.struct(
             F.col("req_id").alias("doc_id"),
             F.lit(0).alias("offset"),
             F.col("payload").alias("media_ref"),
-            "content",
-            F.lit(kind == "base64").alias("src_b64"),
+            F.lit(None).cast("int").alias("page"),
         )
-        return ocr_in.mapInArrow(
-            make_ocr_udf(cfg), schema=OCR_RESULT_SCHEMA
+        return df.select(F.array(req).alias("reqs"), "content").mapInArrow(
+            make_grouped_ocr_udf(cfg, from_base64=kind == "base64"),
+            schema=OCR_RESULT_SCHEMA,
         ).select(
             F.col("doc_id").alias("req_id"),
             F.lit(kind).alias("task_kind"),
@@ -726,12 +600,13 @@ def extract_documents(
     documents: DataFrame,
     media: DataFrame,
     cfg: PPOCRConfig | None = None,
-    broadcast_media: bool | None = None,
+    broadcast_media: bool = False,
     metrics: dict | None = None,
 ) -> DataFrame:
     """Full pipeline: documents + media → RESULTS (doc_id, spans with
     (kind, text, media_ref, order, code)) — the span-sequence-equality
-    surface (BASELINE.json). ``metrics``: K5 stage accumulators
+    surface (BASELINE.json). ``broadcast_media``: see
+    ``ocr_media_spans``. ``metrics``: K5 stage accumulators
     (make_stage_metrics), filled when the result is materialized."""
     cfg = cfg or PPOCRConfig(cls=True, use_angle_cls=True)
     spans = explode_spans(documents)
@@ -746,7 +621,7 @@ def ocr_blocks(
     documents: DataFrame,
     media: DataFrame,
     cfg: PPOCRConfig | None = None,
-    broadcast_media: bool | None = None,
+    broadcast_media: bool = False,
 ) -> DataFrame:
     """Per-box result records — the reference's K1 JSON payload as typed
     columns: one row per text block with (box 4x2, text, score, cls_*, end)

@@ -289,9 +289,10 @@ def write_extraction_layout(
       nothing; no layout to exploit).
 
     Downstream ``pipeline.extract_documents_colocated`` then runs the
-    media branch — group requests per payload, attach payload, OCR —
-    with ZERO Exchange: the shuffle the co-partitioned path pays per run
-    is paid here once, at ingest. Bucket count fixes the OCR stage's
+    same media path as ``extract_documents`` — group requests per
+    payload, attach payload, OCR — without its two repartitions, with
+    ZERO Exchange: the shuffle the runtime path pays per run is paid
+    here once, at ingest. Bucket count fixes the OCR stage's
     parallelism, so size it for the target cluster (e.g. 4096 at 10^12
     docs), not the corpus."""
     from ppocr_spark.pipeline import explode_spans, media_span_ids

@@ -29,7 +29,7 @@ def process_extract_batch(
     media: DataFrame,
     out_dir: str,
     cfg: PPOCRConfig,
-    broadcast_media: bool | None = True,
+    broadcast_media: bool = True,
 ) -> None:
     """One idempotent micro-batch: run the batch pipeline and atomically
     REPLACE this batch's ``batch_id=N`` partition (dynamic partition
@@ -59,7 +59,7 @@ def stream_extract(
     checkpoint_dir: str,
     cfg: PPOCRConfig | None = None,
     available_now: bool = True,
-    broadcast_media: bool | None = True,
+    broadcast_media: bool = True,
 ):
     """Start (or drain, with available_now) a streaming extraction.
 

@@ -62,9 +62,14 @@ class TestCacheHygiene:
         corpus scale it saves a second full scan."""
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         derived = docs.groupBy("lang").count()
+        # the size estimate is real, not the stats-unavailable default
+        size = cache.plan_size_bytes(docs)
+        assert isinstance(size, int) and 0 < size < 1 << 62
         # small source, default threshold: pass-through, nothing cached
+        # (persist() is lazy, so only is_cached tells the two apart)
         out = cache.track_if_large(docs, derived)
         assert out is derived
+        assert not derived.is_cached
         assert _n_cached(spark) == 0
         # threshold 0: persists and registers for release
         out2 = cache.track_if_large(docs, derived, threshold_bytes=0)

@@ -486,6 +486,8 @@ class TestConfig:
         p = tmp_path / "cfg.txt"
         p.write_text(
             "# comment\ndet_db_thresh=0.4\nlimit_side_len 640\nparser multi_line\n"
+            # reference keys the engine does not read are skipped
+            "rec_img_w 320\nensure_ascii true\n"
         )
         cfg = PPOCRConfig.from_file(str(p), limit_side_len=720)
         assert cfg.det_db_thresh == 0.4

@@ -109,6 +109,66 @@ class TestOcrDispatch:
         )
 
 
+class TestOcrUdf:
+    """The OCR UDF on hand-built Arrow batches (no Spark)."""
+
+    @staticmethod
+    def _run(udf, rows):
+        import pyarrow as pa
+
+        req = pa.struct([("doc_id", pa.string()), ("offset", pa.int32()),
+                         ("media_ref", pa.string()), ("page", pa.int32())])
+        batch = pa.RecordBatch.from_pydict(
+            {"reqs": [r for r, _ in rows], "content": [c for _, c in rows]},
+            schema=pa.schema([("reqs", pa.list_(req)),
+                              ("content", pa.binary())]),
+        )
+        out = [b.to_pylist() for b in udf(iter([batch]))]
+        return [r for b in out for r in b]
+
+    def test_rows_in_request_order_and_each_page_decoded_once(
+        self, monkeypatch
+    ):
+        from collections import Counter
+
+        import ppocr_spark.sources.pdf as pdf
+        from ppocr_spark.pipeline import make_grouped_ocr_udf
+
+        img1, _ = render_page(["alpha beta gamma"])
+        img2, _ = render_page(["delta epsilon"])
+        blob = encode_pdf([img1, img2])
+        decoded = Counter()
+
+        def counting_decode(data, page):
+            decoded[page] += 1
+            return decode_pdf_page(data, page)
+
+        monkeypatch.setattr(pdf, "decode_pdf_page", counting_decode)
+        reqs = [
+            {"doc_id": "d", "offset": i, "media_ref": f"p.pdf#page={p}",
+             "page": p}
+            for i, p in enumerate([1, 2, 1, 9])
+        ]
+        missing = [{"doc_id": "e", "offset": 0, "media_ref": "gone",
+                    "page": None}]
+        out = self._run(make_grouped_ocr_udf(PPOCRConfig()),
+                        [(reqs, blob), (missing, None)])
+        assert [(r["doc_id"], r["offset"]) for r in out] == [
+            ("d", 0), ("d", 1), ("d", 2), ("d", 3), ("e", 0)]
+        assert [r["code"] for r in out] == [
+            int(StatusCode.OK), int(StatusCode.OK), int(StatusCode.OK),
+            int(StatusCode.PATH_READ_FAIL), int(StatusCode.PATH_NOT_EXIST)]
+        assert out[0]["text"] == out[2]["text"] != out[1]["text"]
+        assert decoded == {1: 1, 2: 1, 9: 1}
+
+        b64 = self._run(
+            make_grouped_ocr_udf(PPOCRConfig(), from_base64=True),
+            [([{"doc_id": "b", "offset": 0, "media_ref": "x", "page": None}],
+              b"junk bytes")],
+        )
+        assert [r["code"] for r in b64] == [int(StatusCode.BASE64_IMAGE_FAIL)]
+
+
 class TestPropertyRoundtrip:
     def test_hypothesis_roundtrip(self):
         from hypothesis import given, settings

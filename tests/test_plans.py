@@ -65,22 +65,41 @@ class TestPlans:
         # check that matters here)
 
     def test_ocr_pipeline_repartitions_before_udf(self, spark, small_corpus):
+        """The single media path: ONE MapInArrow fed by the span requests
+        collected per base_ref, the grouped side hash-repartitioned on
+        base_ref to a pinned count, and with broadcast_media=True the
+        payload side broadcast onto the grouped rows."""
+        import re
+
         from ppocr_spark.config import PPOCRConfig
         from ppocr_spark.pipeline import extract_documents
 
         docs = spark.read.parquet(f"{small_corpus}/documents_spans.parquet")
         media = spark.read.parquet(f"{small_corpus}/media.parquet")
-        plan = _plan(
-            extract_documents(
-                docs, media, PPOCRConfig(cls=True, use_angle_cls=True),
-                broadcast_media=True,
-            )
+        cfg = PPOCRConfig(cls=True, use_angle_cls=True)
+        plan = _plan(extract_documents(docs, media, cfg, broadcast_media=True))
+        assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
+        assert "MapInPandas" not in plan
+        assert re.search(
+            r"\(\d+\) MapInArrow\nInput \[2\]: \[reqs#\d+, content#\d+\]", plan
         )
-        assert "MapInArrow" in plan or "MapInPandas" in plan
-        # cost-ordered waves: explicit range exchange on payload size desc
-        assert "rangepartitioning" in plan.lower()
-        assert "__blob_len" in plan
-        assert "BroadcastHashJoin" in plan  # media side broadcast
+        # reqs = the span requests collected per base_ref
+        assert re.search(
+            r"Keys \[1\]: \[base_ref#\d+\]\nFunctions \[1\]: "
+            r"\[collect_list\(struct\(doc_id[^\n]*\n[^\n]*\n"
+            r"Results [^\n]* AS reqs#\d+\]",
+            plan,
+        )
+        # only the grouped side is repartitioned (pinned count); the
+        # payload side is broadcast as it is
+        n_part = max(spark.sparkContext.defaultParallelism * 4,
+                     cfg.shuffle_partitions)
+        assert len(re.findall(
+            rf"hashpartitioning\(base_ref#\d+, {n_part}\), REPARTITION_BY_NUM",
+            plan,
+        )) == 1
+        assert "rangepartitioning" not in plan.lower()
+        assert "BroadcastHashJoin" in plan
 
     def test_dedup_exact_partial_aggregation(self, spark, sf_dir):
         # hash aggregate must have a map-side partial pass (two HashAggregates)
@@ -465,8 +484,8 @@ class TestColocatedExtraction:
         from ppocr_spark.config import PPOCRConfig
         from ppocr_spark.pipeline import (
             explode_spans,
+            ocr_grouped,
             ocr_media_spans,
-            ocr_media_spans_colocated,
         )
         from ppocr_spark.sources.readers import write_extraction_layout
 
@@ -476,7 +495,8 @@ class TestColocatedExtraction:
         write_extraction_layout(docs, media, n_buckets=8, prefix="t_colo")
         try:
             with _no_broadcast(spark):
-                colo = ocr_media_spans_colocated(
+                # no repartition count: the layout co-locates the inputs
+                colo = ocr_grouped(
                     spark.table("t_colo_media_spans"),
                     spark.table("t_colo_media"),
                     cfg,
