@@ -57,7 +57,6 @@ class PPOCRConfig:
                              # main: DOM-heuristic main-content extraction
 
     # --- Spark-scale knobs (no reference analog; north_rule axes A+B)
-    shuffle_partitions: int = 32
     doc_salt_buckets: int = 8        # salting factor for media-heavy docs
     arrow_batch_rows: int = 64       # maxRecordsPerBatch for media UDFs
 

@@ -9,8 +9,8 @@ pixel work lives in ONE Arrow-batched ``mapInArrow`` UDF):
       └─ kind='media' → group span requests per payload
                                                 [hash exchange on base_ref]
                       → left join payloads      [co-partitioned on base_ref]
-                      → mapInArrow(ocr_udf)     [decode each page once,
-                                                 det→cls→rec→layout]
+                      → mapInArrow(ocr_udf)     [decode→det→cls→rec→
+                                                 layout once per page]
       → union                                   [no shuffle]
       → groupBy(doc_id) reassembly              [salted two-phase when docs
                                                  are media-heavy (north_rule)]
@@ -65,11 +65,12 @@ STAGE_KEYS = (
 
 def make_stage_metrics(spark: SparkSession) -> dict:
     """Create the K5 stage-timing accumulators. Pass the dict to
-    ``extract_documents``/``ocr_media_spans``; executors add per-span
-    stage wall-ms, the driver reads totals after any action via
-    ``snapshot_stage_metrics``. Accumulators are the Spark-native analog
-    of the reference's process-global AutoLogger — run-scoped, crossing
-    executor boundaries for free.
+    ``extract_documents``/``ocr_media_spans``; executors add stage wall-ms
+    once per distinct page OCR'd and ``ocr_spans`` once per request; the
+    driver reads totals after any action via ``snapshot_stage_metrics``.
+    Accumulators are the Spark-native analog of the reference's
+    process-global AutoLogger — run-scoped, crossing executor boundaries
+    for free.
 
     Semantics: AT-LEAST-ONCE, not exact. Spark guarantees exactly-once
     accumulator application only for updates inside actions; these are
@@ -94,7 +95,6 @@ def _ocr_one(
     cfg: PPOCRConfig,
     page: int | None = None,
     from_base64: bool = False,
-    decode_cache: dict | None = None,
 ) -> dict:
     """OCR one media payload → result dict. Total function: every failure
     maps to a status code (cpp/include/task.h:13-61 taxonomy).
@@ -105,7 +105,11 @@ def _ocr_one(
 
     ``from_base64`` selects the reference's base64 error family
     (cpp/src/task.cpp:111-138): missing content (= the base64 string did
-    not decode) → 300, content that decodes to no usable image → 301."""
+    not decode) → 300, content that decodes to no usable image → 301.
+
+    ``cfg.rec=False`` skips cls, rec and layout: every detected box comes
+    back in detection order with empty text and the reference's unset
+    score -1 (its K1 text filter is rec-only, cpp/src/task.cpp:83-87)."""
     import numpy as np
 
     from ppocr_spark.geometry import perspective_crop
@@ -135,13 +139,7 @@ def _ocr_one(
         return {**empty, "code": int(no_content)}
     data = bytes(content)
     t0 = perf_counter()
-    # decode_cache (the OCR UDF): all requests of one UDF row share one
-    # payload, so each page decodes once per group — the
-    # decoded page is read-only downstream (det/crop/cls never mutate it)
-    cached = decode_cache.get(page) if decode_cache is not None else None
-    if cached is not None:
-        img = cached
-    elif is_pdf(data):
+    if is_pdf(data):
         try:
             img = decode_pdf_page(data, page if page is not None else 1)
         except PdfError:
@@ -154,8 +152,6 @@ def _ocr_one(
             img = to_gray(decode(data))
         except PngError:
             return {**empty, "code": int(bad_image)}
-    if decode_cache is not None and cached is None:
-        decode_cache[page] = img
     stage_ms["decode_ms"] = (perf_counter() - t0) * 1e3
     if img.size == 0:
         return {
@@ -177,6 +173,19 @@ def _ocr_one(
     stage_ms["det_ms"] = (perf_counter() - t0) * 1e3
     if not quads:
         return {**empty, "code": int(StatusCode.NO_TEXT)}
+
+    def corners(q) -> list:
+        # det disabled: the reference emits -1 sentinel corners, not the
+        # whole-page quad the crop used (cpp/src/task.cpp:74-81)
+        if not cfg.det:
+            return [[-1, -1]] * 4
+        return [[int(x), int(y)] for x, y in q]
+
+    if not cfg.rec:
+        n = len(quads)
+        boxes = [[c for p in corners(q) for c in p] for q in quads]
+        return {**empty, "code": int(StatusCode.OK), "boxes": boxes,
+                "texts": [""] * n, "scores": [-1.0] * n, "ends": ["\n"] * n}
 
     t0 = perf_counter()
     crops = [perspective_crop(img, q) for q in quads]
@@ -200,21 +209,14 @@ def _ocr_one(
     )
     stage_ms["rec_ms"] = (perf_counter() - t0) * 1e3
 
-    # K1 filters: drop empty-text / score<=0 records when rec is on
-    # (cpp/src/task.cpp:83-87)
+    # K1 filters: drop empty-text / score<=0 (cpp/src/task.cpp:83-87)
     blocks = []
     for i, (q, (txt, score)) in enumerate(zip(quads, rec)):
         if not txt or score <= 0:
             continue
-        # det disabled: the reference emits -1 sentinel corners, not the
-        # whole-page quad the crop used (cpp/src/task.cpp:74-81)
         blocks.append(
             {
-                "box": (
-                    [[-1, -1]] * 4
-                    if not cfg.det
-                    else [[int(x), int(y)] for x, y in q]
-                ),
+                "box": corners(q),
                 "text": txt,
                 "score": float(score),
                 "cls_label": cls_labels[i] if cls_labels else None,
@@ -251,16 +253,18 @@ def make_grouped_ocr_udf(
     """The OCR UDF: an Arrow-batch generator for ``mapInArrow``. Each input
     row carries ONE media payload (``content``) plus the list of span
     requests addressing it (``reqs``: doc_id/offset/media_ref/page
-    structs); each page of the payload is decoded once per row, however
-    many requests address it, and the payload is never duplicated per
-    span row. Output: one ``OCR_RESULT_SCHEMA`` row per request, in
+    structs); each distinct page of the payload is OCR'd once per row
+    (decode → det → crop → cls → rec → layout), and that result answers
+    every request addressing the page. The payload is never duplicated
+    per span row. Output: one ``OCR_RESULT_SCHEMA`` row per request, in
     request order.
 
     cfg travels by closure (the broadcast analog of the reference's
     one-time engine init, cpp/src/task.cpp:243-250 — the glyph 'model
     weights' rebuild deterministically per executor and are
     process-cached). ``metrics`` (from ``make_stage_metrics``): K5
-    per-stage timing accumulators, added to once per batch.
+    per-stage timing accumulators, added to once per batch; stage ms
+    count each OCR'd page once, ``ocr_spans`` counts requests.
     ``from_base64`` selects the base64 error family of ``_ocr_one``.
 
     mapInArrow, not mapInPandas: the input carries multi-MB binary image
@@ -275,15 +279,17 @@ def make_grouped_ocr_udf(
                 batch.column("reqs").to_pylist(), batch.column("content")
             ):
                 c = content.as_py() if content.is_valid else None
-                page_cache: dict = {}
+                by_page: dict = {}  # page → its (read-only) result
                 for req in reqs:
-                    r = _ocr_one(c, cfg, page=req["page"],
-                                 from_base64=from_base64,
-                                 decode_cache=page_cache)
-                    if metrics is not None:
+                    page = req["page"]
+                    r = by_page.get(page)
+                    if r is None:
+                        r = by_page[page] = _ocr_one(
+                            c, cfg, page=page, from_base64=from_base64
+                        )
                         for k, v in r["stage_ms"].items():
                             totals[k] += v
-                        totals["ocr_spans"] += 1
+                    totals["ocr_spans"] += 1
                     # pa.array drops the keys the struct does not declare
                     # (the request's page, the result's stage_ms)
                     rows.append({**req, **r})
@@ -383,28 +389,24 @@ def ocr_grouped(
     blob once instead of 50 times (the per-partition payload-cache design,
     SCALE.md §3b).
 
-    ``n_part``: hash-repartition the grouped rows on base_ref to this
-    count, which AQE cannot coalesce — a small input would otherwise
-    serialize the OCR stage onto a handful of tasks. ``None`` for inputs
-    the storage layout already co-locates (``extract_documents_colocated``).
+    ``n_part``: hash-repartition the slim request rows on base_ref to this
+    count BEFORE the groupBy, so the aggregate and the join reuse that one
+    exchange, which AQE cannot coalesce. (After the groupBy, the planner
+    drops it whenever ``n_part`` equals ``spark.sql.shuffle.partitions``,
+    leaving a coalescible exchange under the OCR stage.) ``None`` for
+    inputs the storage layout already co-locates
+    (``extract_documents_colocated``).
     """
-    # One row per payload, not per span. An interleaved A/B at local[4] (a
-    # 4-vCPU VM) on the docs_mixed benchmark inputs (median pass wall over
-    # 6 rotated rounds, seeds 1 / 7) put the per-span arm this replaced
-    # (payload broadcast onto span rows, range-partitioned by blob size)
-    # at 4.07 / 4.35 s, this grouping co-partitioned at 3.83 / 4.29 s and
-    # with a broadcast payload side at 3.86 / 4.23 s. The per-span arm did
-    # one thing better: it spread one hot payload's spans over several
-    # tasks, where here all spans of a payload run in one task. No
-    # benchmark workload has such a payload (docs_mixed: at most 10 spans
-    # on one payload).
+    # One row per payload, not per span: this beat the per-span arm it
+    # replaced in an interleaved A/B (CHANGES.md). Its cost: all spans of
+    # one payload run in one task (docs_mixed: at most 10 per payload).
+    if n_part:
+        ids = ids.repartition(n_part, "base_ref")
     grouped = ids.groupBy("base_ref").agg(
         F.collect_list(
             F.struct("doc_id", "offset", "media_ref", "page")
         ).alias("reqs")
     )
-    if n_part:
-        grouped = grouped.repartition(n_part, "base_ref")
     return (
         grouped.join(payloads, "base_ref", "left")
         .drop("base_ref")
@@ -425,12 +427,10 @@ def ocr_media_spans(
     the payload moves exactly once — and Spark (planner or AQE) still
     broadcasts a media side below its broadcast threshold.
     ``broadcast_media=True`` broadcasts the payload side onto the grouped
-    rows instead."""
+    rows instead. Partition count: one OCR task per task slot, since each
+    Python task pays a fixed start-up cost before any work (SCALE.md §2)."""
     m = media.select(F.col("media_ref").alias("base_ref"), "content")
-    n_part = max(
-        spans.sparkSession.sparkContext.defaultParallelism * 4,
-        cfg.shuffle_partitions,
-    )
+    n_part = spans.sparkSession.sparkContext.defaultParallelism
     payloads = F.broadcast(m) if broadcast_media else m.repartition(
         n_part, "base_ref"
     )

@@ -486,13 +486,15 @@ class TestConfig:
         p = tmp_path / "cfg.txt"
         p.write_text(
             "# comment\ndet_db_thresh=0.4\nlimit_side_len 640\nparser multi_line\n"
-            # reference keys the engine does not read are skipped
-            "rec_img_w 320\nensure_ascii true\n"
+            # reference keys the engine does not read are skipped, and
+            # so is the removed OCR task-count knob
+            "rec_img_w 320\nensure_ascii true\nshuffle_partitions 64\n"
         )
         cfg = PPOCRConfig.from_file(str(p), limit_side_len=720)
         assert cfg.det_db_thresh == 0.4
         assert cfg.limit_side_len == 720  # CLI override wins
         assert cfg.parser == "multi_line"
+        assert not hasattr(cfg, "shuffle_partitions")
 
     def test_status_messages(self):
         from ppocr_spark.status import StatusCode, state_message

@@ -108,6 +108,41 @@ class TestOcrDispatch:
             StatusCode.PATH_READ_FAIL
         )
 
+    def test_rec_off_returns_detected_boxes_without_text(self, monkeypatch):
+        import ppocr_spark.operators.classify as classify
+        import ppocr_spark.operators.recognize as recognize
+        from ppocr_spark.operators.detect import detect
+
+        img, _ = render_page(["alpha beta gamma", "delta epsilon"])
+        png = encode_gray(img)
+
+        def must_not_run(*args, **kwargs):
+            raise AssertionError("cls/rec ran with rec=False")
+
+        monkeypatch.setattr(classify, "classify", must_not_run)
+        monkeypatch.setattr(recognize, "recognize_batch", must_not_run)
+        cfg = PPOCRConfig(rec=False, cls=True, use_angle_cls=True)
+        r = _ocr_one(png, cfg)
+        quads = detect(img, cfg)
+        n = len(quads)
+        assert n >= 2
+        # every detected box, in detection order; no K1 text filter
+        assert r["code"] == int(StatusCode.OK)
+        assert r["boxes"] == [
+            [int(c) for p in q for c in p] for q in quads
+        ]
+        assert r["text"] == ""
+        assert r["texts"] == [""] * n
+        assert r["scores"] == [-1.0] * n
+        assert r["cls_labels"] == [] and r["cls_scores"] == []
+        assert set(r["stage_ms"]) == {"decode_ms", "det_ms"}
+        # det off too: one whole-page box with the -1 sentinel corners
+        r = _ocr_one(png, cfg.replace(det=False))
+        assert (r["code"], r["boxes"]) == (int(StatusCode.OK), [[-1] * 8])
+        # nothing detected is still NO_TEXT
+        blank = encode_gray(np.full((64, 64), 255, dtype=np.uint8))
+        assert _ocr_one(blank, cfg)["code"] == int(StatusCode.NO_TEXT)
+
 
 class TestOcrUdf:
     """The OCR UDF on hand-built Arrow batches (no Spark)."""
@@ -167,6 +202,57 @@ class TestOcrUdf:
               b"junk bytes")],
         )
         assert [r["code"] for r in b64] == [int(StatusCode.BASE64_IMAGE_FAIL)]
+
+    def test_each_distinct_page_ocrd_once(self, monkeypatch):
+        """Requests for the same page of one payload share one OCR result:
+        det runs once per distinct page, stage ms are added once per
+        computed page, and ``ocr_spans`` still counts every request."""
+        import time
+        from collections import Counter
+
+        import ppocr_spark.operators.detect as det
+        from ppocr_spark.pipeline import STAGE_KEYS, make_grouped_ocr_udf
+
+        img1, _ = render_page(["alpha beta gamma"])
+        img2, _ = render_page(["delta epsilon"])
+        blob = encode_pdf([img1, img2])
+        detected = Counter()
+        clock = [0.0]
+        real_detect = det.detect
+
+        def counting_detect(img, cfg):
+            # the only step that moves the clock: each call reads 5 ms
+            clock[0] += 0.005
+            page = [np.array_equal(img, i) for i in (img1, img2)].index(True)
+            detected[page + 1] += 1
+            return real_detect(img, cfg)
+
+        class Acc:  # the accumulator interface the UDF uses, no Spark
+            def __init__(self):
+                self.value = 0.0
+
+            def add(self, v):
+                self.value += v
+
+        monkeypatch.setattr(det, "detect", counting_detect)
+        monkeypatch.setattr(time, "perf_counter", lambda: clock[0])
+        metrics = {k: Acc() for k in STAGE_KEYS}
+        reqs = [
+            {"doc_id": "d", "offset": i, "media_ref": f"p.pdf#page={p}",
+             "page": p}
+            for i, p in enumerate([1, 2, 1, 9])
+        ]
+        out = self._run(make_grouped_ocr_udf(PPOCRConfig(), metrics),
+                        [(reqs, blob)])
+        assert detected == {1: 1, 2: 1}
+        assert [r["code"] for r in out] == [
+            int(StatusCode.OK), int(StatusCode.OK), int(StatusCode.OK),
+            int(StatusCode.PATH_READ_FAIL)]
+        keys = ("code", "text", "boxes")
+        assert [out[0][k] for k in keys] == [out[2][k] for k in keys]
+        assert out[0]["text"] != out[1]["text"]
+        assert metrics["ocr_spans"].value == 4
+        assert metrics["det_ms"].value == pytest.approx(2 * 5.0)
 
 
 class TestPropertyRoundtrip:

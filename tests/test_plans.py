@@ -19,6 +19,38 @@ def _plan(df) -> str:
     )
 
 
+def _request_side_exchanges(plan: str) -> list[str]:
+    """Arguments of every Exchange in the subtree of the collect_list
+    aggregate that builds ``reqs`` (the request side of the media join),
+    read from the tree and the node details of a formatted plan."""
+    import re
+
+    tree, _, details = plan.partition("\n\n")
+    nodes = []  # (depth, node id) in printed (top-down) order
+    for line in tree.splitlines():
+        m = re.search(r"([A-Za-z].*) \((\d+)\)$", line)
+        if m:
+            nodes.append((m.start(1), m.group(2)))
+    info = {
+        m.group(1): m.group(2)
+        for m in re.finditer(
+            r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", details, re.M | re.S
+        )
+    }
+    top = next(
+        i for i, (_, n) in enumerate(nodes)
+        if re.search(r"(?<!partial_)collect_list\(struct\(doc_id", info[n])
+    )
+    depth = nodes[top][0]
+    below = []
+    for d, n in nodes[top + 1:]:
+        if d <= depth:
+            break
+        if info[n].startswith("Exchange"):
+            below.append(re.search(r"Arguments: (.*)", info[n]).group(1))
+    return below
+
+
 from contextlib import contextmanager  # noqa: E402
 
 
@@ -66,9 +98,14 @@ class TestPlans:
 
     def test_ocr_pipeline_repartitions_before_udf(self, spark, small_corpus):
         """The single media path: ONE MapInArrow fed by the span requests
-        collected per base_ref, the grouped side hash-repartitioned on
-        base_ref to a pinned count, and with broadcast_media=True the
-        payload side broadcast onto the grouped rows."""
+        collected per base_ref. The request rows are hash-repartitioned on
+        base_ref to one task per slot BELOW the collect_list aggregate,
+        so the aggregate reuses that exchange and the OCR stage cannot be
+        coalesced — for any spark.sql.shuffle.partitions, including the
+        count itself (where a repartition above the aggregate would be
+        dropped). With broadcast_media=True the payload side is broadcast
+        as it is; with False it is repartitioned to the same count."""
+        import itertools
         import re
 
         from ppocr_spark.config import PPOCRConfig
@@ -77,29 +114,59 @@ class TestPlans:
         docs = spark.read.parquet(f"{small_corpus}/documents_spans.parquet")
         media = spark.read.parquet(f"{small_corpus}/media.parquet")
         cfg = PPOCRConfig(cls=True, use_angle_cls=True)
-        plan = _plan(extract_documents(docs, media, cfg, broadcast_media=True))
-        assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
-        assert "MapInPandas" not in plan
-        assert re.search(
-            r"\(\d+\) MapInArrow\nInput \[2\]: \[reqs#\d+, content#\d+\]", plan
-        )
-        # reqs = the span requests collected per base_ref
-        assert re.search(
-            r"Keys \[1\]: \[base_ref#\d+\]\nFunctions \[1\]: "
-            r"\[collect_list\(struct\(doc_id[^\n]*\n[^\n]*\n"
-            r"Results [^\n]* AS reqs#\d+\]",
-            plan,
-        )
-        # only the grouped side is repartitioned (pinned count); the
-        # payload side is broadcast as it is
-        n_part = max(spark.sparkContext.defaultParallelism * 4,
-                     cfg.shuffle_partitions)
-        assert len(re.findall(
-            rf"hashpartitioning\(base_ref#\d+, {n_part}\), REPARTITION_BY_NUM",
-            plan,
-        )) == 1
-        assert "rangepartitioning" not in plan.lower()
-        assert "BroadcastHashJoin" in plan
+        n_part = spark.sparkContext.defaultParallelism
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            for broadcast_media, shuffle_partitions in itertools.product(
+                (True, False), (n_part, n_part + 3)
+            ):
+                spark.conf.set(
+                    "spark.sql.shuffle.partitions", str(shuffle_partitions)
+                )
+                plan = _plan(extract_documents(
+                    docs, media, cfg, broadcast_media=broadcast_media
+                ))
+                assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
+                assert "MapInPandas" not in plan
+                assert re.search(
+                    r"\(\d+\) MapInArrow\nInput \[2\]: "
+                    r"\[reqs#\d+, content#\d+\]",
+                    plan,
+                )
+                # reqs = the span requests collected per base_ref
+                assert re.search(
+                    r"Keys \[1\]: \[base_ref#\d+\]\nFunctions \[1\]: "
+                    r"\[collect_list\(struct\(doc_id[^\n]*\n[^\n]*\n"
+                    r"Results [^\n]* AS reqs#\d+\]",
+                    plan,
+                )
+                # the request side crosses exactly one exchange, the
+                # pinned repartition, below the aggregate
+                below = _request_side_exchanges(plan)
+                where = (broadcast_media, shuffle_partitions, below)
+                assert len(below) == 1, where
+                assert re.match(
+                    rf"hashpartitioning\(base_ref#\d+, {n_part}\), "
+                    r"REPARTITION_BY_NUM",
+                    below[0],
+                ), where
+                assert not re.search(
+                    r"hashpartitioning\(base_ref#\d+, \d+\), "
+                    r"ENSURE_REQUIREMENTS",
+                    plan,
+                )
+                # the payload side: broadcast as it is, or repartitioned
+                # to the same count
+                assert len(re.findall(
+                    rf"hashpartitioning\(base_ref#\d+, {n_part}\), "
+                    r"REPARTITION_BY_NUM",
+                    plan,
+                )) == (1 if broadcast_media else 2)
+                assert "rangepartitioning" not in plan.lower()
+                if broadcast_media:
+                    assert "BroadcastHashJoin" in plan
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     def test_dedup_exact_partial_aggregation(self, spark, sf_dir):
         # hash aggregate must have a map-side partial pass (two HashAggregates)
