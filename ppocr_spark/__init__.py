@@ -8,6 +8,10 @@ No code is copied from the reference; the architecture is Spark-first
 (DataFrame/Catalyst + pandas/Arrow UDFs), not a port of the C++ engine.
 """
 
+from ppocr_spark import _zipfinders
+
+_zipfinders.install()  # before any engine UDF runs in a worker; see module
+
 from ppocr_spark.config import PPOCRConfig
 from ppocr_spark.status import StatusCode
 

@@ -659,8 +659,11 @@ def ocr_blocks(
 def warm_workers(spark: SparkSession, partitions: int | None = None) -> int:
     """Initialize every Python worker: import the engine and build the
     glyph 'model weights' (the executor-singleton load the reference does
-    once per process, cpp/src/task.cpp:243-250). Run before timing
-    throughput — steady-state workers are what a long 100 TB job sees."""
+    once per process, cpp/src/task.cpp:243-250). Importing the engine also
+    installs its stat-checked zip finders (``ppocr_spark._zipfinders``) in
+    each warm worker, so later tasks skip re-reading ``pyspark.zip``. Run
+    before timing throughput — steady-state workers are what a long 100 TB
+    job sees."""
 
     def init(batches):
         from ppocr_spark.font import template_stack
